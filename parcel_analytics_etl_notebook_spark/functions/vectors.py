@@ -196,18 +196,3 @@ def cosine_prenormed_hof(
     return F.when(
         (na_c == 0) | (nb_c == 0), F.lit(None).cast("double")
     ).otherwise(dot(a, b) / (na_c * nb_c))
-
-
-def cosine_literal(vec: str, weights: list[float]) -> Column:
-    """Cosine against a driver-side constant vector — the codegen'd
-    twin of ``cosine_similarity(vec, F.array(lits))``. The constant
-    side's norm folds at plan-build time in Python (identical
-    left-associative double chain → identical IEEE value)."""
-    wnorm_sq = 0.0
-    for wd in weights:
-        wnorm_sq = wnorm_sq + float(wd) * float(wd)
-    wnorm = wnorm_sq ** 0.5
-    na = F.sqrt(norm_literal_sq(vec, len(weights)))
-    return F.when(
-        (na == 0) | (F.lit(wnorm) == 0), F.lit(None).cast("double")
-    ).otherwise(dot_literal(vec, weights) / (na * F.lit(wnorm)))

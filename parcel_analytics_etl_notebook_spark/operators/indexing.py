@@ -145,15 +145,6 @@ def _bucket_sort_key(df: DataFrame, col_name: str) -> Column | None:
     return None
 
 
-#: bucket-offset attachment strategy (r13 A/B knob): True = ONE
-#: groupBy(__pid).count() collect + literal map (the r12 shape — fewer
-#: exchanges/jobs, but an extra BLOCKING driver action per index build
-#: that serializes ahead of the final pass); False = the lazy
-#: explode-fold (:func:`_bucket_offsets`) broadcast back — no driver
-#: round trip, two extra bucket-grain (≤65k-row) exchanges. Both are
-#: scale-clean; the choice is empirical (tools/ab_profile.py).
-OFFSETS_VIA_COLLECT = True
-
 #: fine-chunk width of the two-level coarse→fine bucket lookup; also
 #: the cutoff below which the single-level unrolled comparison is used
 _CHUNK = 256
@@ -438,49 +429,14 @@ def stable_global_index(
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     bucketed = _bucketed(df, order_cols, n, boundaries)
     if bucketed is not None:
-        # bucket offsets: ONE counts aggregate collected to the driver
-        # and attached as a literal map / tiny broadcast (r12 opt). The
-        # collect is bounded by the BUCKET count (≤ _MAX_BUCKETS =
-        # 65,536 rows at any corpus size — model-grain, same class as
-        # the boundary collects), counts are exact BIGINTs so the
-        # driver prefix sum is bit-identical to the old explode-fold's
-        # shuffled SUM, and the swap removes the fold's two extra
-        # exchanges + broadcast-join stages from every index build
-        # (measured: 9–10 → ~5 jobs per call on the sf0.1 bench; the
-        # counts pass doubles as the persist materialization the first
-        # consumer paid anyway).
-        with_pid, max_pid = bucketed
-        if offsets is not None:
+        with_pid, _ = bucketed
+        offd = (
             # the caller's probe already produced exact offsets in the
             # same action as the boundaries — zero extra jobs here
-            offd = _attach_offset(with_pid, offsets)
-        elif OFFSETS_VIA_COLLECT:
-            counts = {
-                r["__pid"]: r["__c"]
-                for r in with_pid.groupBy("__pid")
-                .agg(F.count(F.lit(1)).alias("__c"))
-                .collect()
-            }
-            offsets = {}
-            running = 0
-            for pid in sorted(counts):
-                offsets[pid] = running
-                running += counts[pid]
-            offd = _attach_offset(with_pid, offsets)
-        else:
-            # lazy explode-fold offsets (the pre-r12 shape): no driver
-            # collect, no extra blocking action — the bucket-grain
-            # counts fold broadcasts back (left join: the minimum
-            # bucket has no offset row)
-            offd = with_pid.join(
-                _bucket_offsets(
-                    with_pid,
-                    [F.count(F.lit(1)).cast("bigint").alias("__off")],
-                    max_pid,
-                ),
-                "__pid",
-                "left",
-            )
+            _attach_offset(with_pid, offsets)
+            if offsets is not None
+            else _collected_offsets(with_pid)
+        )
         return (
             offd.withColumn(
                 # widen BEFORE adding: int32 row_number wraps negative
@@ -498,17 +454,7 @@ def stable_global_index(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets = {}
-    running = 0
-    for pid in sorted(counts):
-        offsets[pid] = running
-        running += counts[pid]
-
-    indexed = _attach_offset(with_pid, offsets).withColumn(
+    indexed = _collected_offsets(with_pid).withColumn(
         out_col,
         F.col("__off").cast("bigint") + F.row_number().over(w).cast("bigint"),
     )
@@ -581,31 +527,10 @@ def windowed_adjacent_pairs(
             F.col("__rn").alias("__rn_b"), F.col(id_col).alias("id_b")
         )
         return probe.join(build, "__rn_b").select("id_a", "id_b")
-    with_pid, max_pid = bucketed
-    if OFFSETS_VIA_COLLECT:
-        counts = {
-            r["__pid"]: r["__c"]
-            for r in with_pid.groupBy("__pid")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        running = 0
-        for pid in sorted(counts):
-            offsets[pid] = running
-            running += counts[pid]
-        offd = _attach_offset(with_pid, offsets)
-    else:
-        offd = with_pid.join(
-            _bucket_offsets(
-                with_pid,
-                [F.count(F.lit(1)).cast("bigint").alias("__off")],
-                max_pid,
-            ),
-            "__pid",
-            "left",
-        )
-    return _pairs_from_offd(offd, order_cols, window, id_col)
+    with_pid, _ = bucketed
+    return _pairs_from_offd(
+        _collected_offsets(with_pid), order_cols, window, id_col
+    )
 
 
 def _pairs_from_offd(
@@ -614,7 +539,7 @@ def _pairs_from_offd(
     """The windowed-pair construction over an offset-attached bucketed
     frame (``__pid`` + ``__off`` columns): in-bucket ``lead`` pairs +
     the bounded cross-boundary stitch. Shared by
-    :func:`windowed_adjacent_pairs` (all offset strategies) and
+    :func:`windowed_adjacent_pairs` and
     :func:`multi_windowed_adjacent_pairs`."""
     w_rank = Window.partitionBy("__pid").orderBy(*order_cols)
     w_all = Window.partitionBy("__pid")
@@ -765,6 +690,33 @@ def _attach_offset(with_pid: DataFrame, offsets: dict) -> DataFrame:
         [(int(p), int(v)) for p, v in items], "__pid int, __off bigint"
     )
     return with_pid.join(F.broadcast(lookup), on="__pid", how="left")
+
+
+def _collected_offsets(with_pid: DataFrame) -> DataFrame:
+    """Attach ``__off`` from exact per-``__pid`` row counts: ONE counts
+    aggregate collected to the driver, prefix-summed there and attached
+    via :func:`_attach_offset`.
+
+    Why a collect rather than the lazy explode-fold
+    (:func:`_bucket_offsets`): the fold costs two extra bucket-grain
+    exchanges plus a broadcast-join stage per index build (9–10 vs ~5
+    jobs per call on the sf0.1 bench), while this collect is bounded by
+    the bucket count (≤ _MAX_BUCKETS rows at any corpus size — the same
+    class as the boundary collects) and, for a persisted input, doubles
+    as the materialization its first consumer pays anyway. Counts are
+    exact BIGINTs, so the offsets are bit-identical either way."""
+    counts = {
+        r["__pid"]: r["__c"]
+        for r in with_pid.groupBy("__pid")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .collect()
+    }
+    offsets: dict[int, int] = {}
+    running = 0
+    for pid in sorted(counts):
+        offsets[pid] = running
+        running += counts[pid]
+    return _attach_offset(with_pid, offsets)
 
 
 def global_running_sum(

@@ -19,7 +19,7 @@ DimDate, DimShipping (5 FK left joins), FactShippingEvent.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -339,25 +339,34 @@ def build_warehouse(df_flat: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def dq_checkpoint(df: DataFrame, checkpoint: str, cols: list[str] | None = None) -> DataFrame:
-    """PASS/FAIL DQ report rows in the reference's schema
-    (``etl/main.py:21-65`` / FIXTURES.md §C) from ONE aggregate pass."""
+#: one DQ audit row in the reference's schema (``etl/main.py:21-65`` /
+#: FIXTURES.md §C); the writer adds the run's ``timestamp`` column
+DQ_REPORT_SCHEMA = (
+    "check_point string, check_name string, status string, details string"
+)
+_DQRow = Row("check_point", "check_name", "status", "details")
+
+
+def dq_checkpoint(df: DataFrame, checkpoint: str, cols: list[str] | None = None) -> list[Row]:
+    """PASS/FAIL DQ report rows (:data:`DQ_REPORT_SCHEMA`) from ONE
+    aggregate pass. Rows, not a frame: a run gathers every checkpoint's
+    rows into one audit frame (:func:`~.parcel_run.run_parcel_etl`)."""
     summary = dq_summary(df, cols or df.columns[:3]).collect()[0].asDict()
-    return _dq_report(df.sparkSession, summary, checkpoint)
+    return _dq_rows(summary, checkpoint)
 
 
-def dq_checkpoint_observed(spark: SparkSession, observation, checkpoint: str) -> DataFrame:
+def dq_checkpoint_observed(observation, checkpoint: str) -> list[Row]:
     """PASS/FAIL DQ report rows from an ``observe()`` metrics row
     (operators/aggregates.dq_observation) — the checkpoint costs ZERO
     extra passes because the metrics were computed as a side effect of
     the action that consumed the observed frame (e.g. the parquet
     write). Call only after that action has run."""
-    return _dq_report(spark, dict(observation.get), checkpoint)
+    return _dq_rows(dict(observation.get), checkpoint)
 
 
-def _dq_report(spark: SparkSession, summary: dict, checkpoint: str) -> DataFrame:
+def _dq_rows(summary: dict, checkpoint: str) -> list[Row]:
     rows = [
-        (
+        _DQRow(
             checkpoint,
             "Non-empty dataframe",
             "PASS" if summary["row_count"] > 0 else "FAIL",
@@ -371,19 +380,14 @@ def _dq_report(spark: SparkSession, summary: dict, checkpoint: str) -> DataFrame
             col = name[len("nulls_"):]
             n = v or 0
             rows.append(
-                (
+                _DQRow(
                     checkpoint,
                     f"No nulls in column '{col}'",
                     "PASS" if n == 0 else "FAIL",
                     f"Null count: {n}",
                 )
             )
-    out = spark.createDataFrame(
-        rows, "check_point string, check_name string, status string, details string"
-    )
-    return out.withColumn(
-        "timestamp", F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
-    )
+    return rows
 
 
 def kpi_report(fact: DataFrame) -> DataFrame:

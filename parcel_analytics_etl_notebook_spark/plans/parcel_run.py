@@ -15,9 +15,11 @@ import json
 import os
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from parcel_analytics_etl_notebook_spark.operators.aggregates import dq_observation
 from parcel_analytics_etl_notebook_spark.plans.parcel import (
+    DQ_REPORT_SCHEMA,
     build_warehouse,
     dq_checkpoint,
     dq_checkpoint_observed,
@@ -41,10 +43,10 @@ def run_parcel_etl(
     warehouse tables under ``out_dir`` and the DQ audit log next to
     them (mirrors the reference's warehouse/ + metadata layout)."""
     raw = read_csv_multiline(spark, csv_path)
-    dq_frames = [dq_checkpoint(raw, "Before Parsing", raw.columns[:2])]
+    dq_rows = dq_checkpoint(raw, "Before Parsing", raw.columns[:2])
 
     flat = parse_events(raw).persist()  # build_warehouse fans out 6 ways
-    dq_frames.append(dq_checkpoint(flat, "After Parsing", ["event_code", "shipping_id"]))
+    dq_rows += dq_checkpoint(flat, "After Parsing", ["event_code", "shipping_id"])
 
     tables = build_warehouse(flat)
     for name, df in tables.items():
@@ -54,13 +56,13 @@ def run_parcel_etl(
         # pass; this costs none)
         observed, obs = dq_observation(df, df.columns[:3])
         write_parquet(observed, os.path.join(out_dir, name), target_files=target_files)
-        dq_frames.append(
-            dq_checkpoint_observed(spark, obs, f"After Tables Build: {name}")
-        )
+        dq_rows += dq_checkpoint_observed(obs, f"After Tables Build: {name}")
 
-    audit = dq_frames[0]
-    for extra in dq_frames[1:]:
-        audit = audit.unionByName(extra)
+    # ONE frame over all checkpoints' rows: write_csv_audit's coalesce(1)
+    # runs every partition of its input in a single task, in sequence
+    audit = spark.createDataFrame(dq_rows, DQ_REPORT_SCHEMA).withColumn(
+        "timestamp", F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss")
+    )
     write_csv_audit(audit, os.path.join(out_dir, "metadata", "dq_report"))
 
     kpi = kpi_report(tables["FactShippingEvent"]).collect()[0].asDict()

@@ -6,6 +6,7 @@ payloads the reference reads)."""
 
 from __future__ import annotations
 
+import csv
 import json
 import os
 
@@ -169,12 +170,10 @@ def test_kpi_report(warehouse):
 def test_dq_checkpoint(warehouse, spark):
     _, flat = warehouse
     report = dq_checkpoint(flat, "After Parsing", ["event_code", "shipping_id"])
-    rows = {r["check_name"]: r for r in report.collect()}
+    rows = {r["check_name"]: r for r in report}
     assert rows["Non-empty dataframe"]["status"] == "PASS"
     assert rows["No nulls in column 'event_code'"]["status"] == "FAIL"
-    assert set(report.columns) == {
-        "check_point", "check_name", "status", "details", "timestamp",
-    }
+    assert {r["check_point"] for r in report} == {"After Parsing"}
 
 
 def test_dq_observation_matches_summary(warehouse, spark, tmp_path):
@@ -196,7 +195,7 @@ def test_dq_observation_matches_summary(warehouse, spark, tmp_path):
     assert dict(obs.get) == expected
     report = {
         r["check_name"]: r["status"]
-        for r in dq_checkpoint_observed(spark, obs, "cp").collect()
+        for r in dq_checkpoint_observed(obs, "cp")
     }
     assert report["Non-empty dataframe"] == "PASS"
     assert report["No nulls in column 'event_code'"] == "FAIL"
@@ -227,10 +226,33 @@ def test_run_parcel_etl_end_to_end(spark, tmp_path):
         .count()
     )
     assert unresolved == 0  # on-disk fact->dim integrity holds across writes
-    audit = spark.read.option("header", True).csv(
-        str(tmp_path / "wh" / "metadata" / "dq_report")
-    )
+    audit_dir = tmp_path / "wh" / "metadata" / "dq_report"
+    audit = spark.read.option("header", True).csv(str(audit_dir))
     assert audit.filter(F.col("status") == "PASS").count() > 0
+    # the audit log pins the run's whole DQ story: the reference's five
+    # columns, 3 + 3 + 4 × 6 rows in checkpoint order, one part file,
+    # one run timestamp
+    assert set(audit.columns) == {
+        "check_point", "check_name", "status", "details", "timestamp",
+    }
+    parts = list(audit_dir.glob("*.csv"))
+    assert len(parts) == 1
+    with open(parts[0], newline="") as fh:
+        rows = list(csv.DictReader(fh))
+    assert len(rows) == 30
+    labels = list(dict.fromkeys(r["check_point"] for r in rows))
+    assert labels == ["Before Parsing", "After Parsing"] + [
+        f"After Tables Build: {name}"
+        for name in (
+            "DimClient",
+            "DimLocation",
+            "DimState",
+            "DimDate",
+            "DimShipping",
+            "FactShippingEvent",
+        )
+    ]
+    assert len({r["timestamp"] for r in rows}) == 1
 
     # report layer: the notebook's annotated KPI bar chart from the run's
     # KPI dict (matplotlib when installed, SVG twin otherwise)

@@ -26,6 +26,15 @@ def plan_of(spark, name: str) -> str:
     return buf.getvalue()
 
 
+def test_catalog_loads_every_query_module():
+    """Every query module imports (a broken one raises here rather than
+    silently dropping its queries), and every query has an oracle."""
+    from parcel_analytics_etl_notebook_spark.plans import catalog
+
+    assert len(catalog.queries()) == 313
+    assert set(catalog.oracle_sql()) == set(catalog.queries())
+
+
 def test_filter_pushdown_reaches_scan(spark):
     p = plan_of(spark, "pricing_summary")
     assert "LessThanOrEqual(l_shipdate" in p  # in PushedFilters of the scan

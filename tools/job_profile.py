@@ -9,7 +9,10 @@ here exactly, every run. Use this when tuning; use bench.py only for
 the headline wall numbers.
 
 Run: ``python tools/job_profile.py [name ...]`` (default: a curated
-set of multi-action queries).
+set of multi-action queries). The session runs ``local[N]`` with N
+shuffle partitions, N = ``$SPARK_GRAFT_CPUS`` (the variable bench.py
+sizes its session by; default here: the host's core count), so job,
+stage and task counts match the sessions they are compared against.
 """
 
 import os
@@ -66,10 +69,11 @@ def main() -> None:
     from parcel_analytics_etl_notebook_spark.plans.catalog import queries
     from parcel_analytics_etl_notebook_spark.session import get_spark
 
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     spark = get_spark(
         app_name="job-profile",
-        master="local[16]",
-        shuffle_partitions=16,
+        master=f"local[{cpus}]",
+        shuffle_partitions=cpus,
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
